@@ -12,15 +12,19 @@ Mapping of the canonical 3-job PFP pipeline onto Spark:
                                 PFP implementation; numPartitions knob)
   job 3 (top-K aggregation)  -> orderBy(desc(freq)).limit(K)
 
-Nothing here uses RDDs; FPGrowth/PrefixSpan are the DataFrame-native
-MLlib estimators. An independent DataFrame-only Apriori lives in
-`apriori_frequent_itemsets` as a cross-check (M8) — same output
-contract as FP-Growth at the same minSupport, used by tests to verify
-MLlib results without trusting MLlib.
+Nothing here builds RDDs; FPGrowth/PrefixSpan are the DataFrame-native
+MLlib estimators. The one RDD-level step persists the RDD under
+FPGrowth's own `freqItemsets` (`fit_fpgrowth`), so a fit mines the
+lattice once and every serve action reads it. An independent
+DataFrame-only Apriori lives in `apriori_frequent_itemsets` as a
+cross-check (M8) — same output contract as FP-Growth at the same
+minSupport, used by tests to verify MLlib results without trusting
+MLlib.
 """
 
 from __future__ import annotations
 
+from pyspark import SparkContext, StorageLevel
 from pyspark.ml.fpm import FPGrowth, FPGrowthModel, PrefixSpan
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -126,26 +130,74 @@ def fit_fpgrowth(
 ) -> FPGrowthModel:
     """M4: fit MLlib FP-Growth (internally the PFP parallelization).
 
-    `fit` is an action (breaks laziness) so the input is cached for the
-    duration of the fit and unpersisted before returning — the model's
-    own outputs (freqItemsets/associationRules) don't reference the
-    input, and `model.transform` recomputes it lazily if needed, so
-    holding the cache would only leak storage memory across a long
-    session running many queries.
+    Mine-once contract: the returned model's lattice is mined once,
+    inside this call. MLlib's `fit` only counts items; its
+    `freqItemsets` is a lazy RDD, so without a pin every serve action
+    (`freq_itemsets`, `association_rules`, `predict_baskets` — whose
+    `transform` collects the rules — and any reader of
+    `model.freqItemsets`) would rebuild and re-mine the FP-trees, and
+    re-derive the baskets behind them. So the fit persists the mined
+    rows (MEMORY_AND_DISK) and counts them, one JVM-only job, while
+    the input is still cached; every reader then serves from that
+    cache. The persisted RDD keeps its lineage, so a lost block is
+    recomputed from it; the ContextCleaner releases its storage once
+    the model is garbage-collected, and it adds no SQL CacheManager
+    entry. Where `_lattice_rdd` cannot find the rows the model is left
+    lazy: serving stays correct and only mines again per action.
+
+    The input is cached for the duration of the fit when it arrives
+    uncached (MLlib's own handlePersistence rule), and that temporary
+    cache is released before returning; an input the caller cached
+    stays cached.
     `num_partitions` is PFP's group count — at 100 TB set it to a few
     times the executor-core count so each conditional FP-tree fits in
     one task's memory.
     """
-    baskets = baskets.cache()
     kwargs = dict(
         itemsCol=items_col, minSupport=min_support, minConfidence=min_confidence
     )
     if num_partitions is not None:
         kwargs["numPartitions"] = num_partitions
+    own_cache = baskets.storageLevel == StorageLevel.NONE
+    if own_cache:
+        baskets = baskets.cache()
     try:
-        return FPGrowth(**kwargs).fit(baskets)
+        model = FPGrowth(**kwargs).fit(baskets)
+        rows = _lattice_rdd(model)
+        if rows is not None:
+            sc = SparkContext._active_spark_context
+            rows.persist(sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK))
+            rows.count()
+        return model
     finally:
-        baskets.unpersist()
+        if own_cache:
+            baskets.unpersist()
+
+
+def _lattice_rdd(model: FPGrowthModel):
+    """The JVM `RDD[Row]` of mined (items, freq) rows under
+    `model.freqItemsets`, or None where the plan does not have the
+    expected shape.
+
+    MLlib builds `freqItemsets` with `createDataFrame(rows, schema)`,
+    a LogicalRDD whose own RDD converts each Row to an InternalRow.
+    That converter reuses one UnsafeRow per partition, so a
+    deserialized cache of it would return one row repeated; the Row
+    RDD one dependency below holds a distinct object per itemset and
+    is the safe level to persist. The element-type check keeps a
+    Spark version that moves this seam from ever persisting the
+    converter instead.
+    """
+    analyzed = model._java_obj.freqItemsets().queryExecution().analyzed()
+    if analyzed.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    deps = analyzed.rdd().dependencies()
+    if deps.size() != 1:
+        return None
+    rows = deps.head().rdd()
+    if rows.elementClassTag().runtimeClass().getName() != "org.apache.spark.sql.Row":
+        return None
+    return rows
 
 
 def freq_itemsets(model: FPGrowthModel) -> DataFrame:
@@ -210,11 +262,12 @@ def apriori_frequent_itemsets(
 
     Returns (items ARRAY, freq BIGINT) for all k <= max_k.
 
-    Materialization contract (same as fit_fpgrowth, whose model holds
-    its freqItemsets eagerly): each level L_k AND each per-k candidate
-    set (cands_id — pre-prune, so potentially larger than L_k) is
-    pinned with an eager `localCheckpoint` — itemset-count-sized, read
-    several times during construction (candidate generation + the
+    Materialization contract (like fit_fpgrowth, whose model's
+    lattice is mined once and persisted during the fit): each level
+    L_k AND each per-k candidate set (cands_id — pre-prune, so
+    potentially larger than L_k) is pinned with an eager
+    `localCheckpoint` — itemset-count-sized, read several times
+    during construction (candidate generation + the
     k+1 prune semi-joins + the counting join's id→array mapback + the
     final union), and WITHOUT lineage truncation the returned plan
     re-inlines every lower level once per reader, turning a 13 s
@@ -378,10 +431,11 @@ def prefix_span(
     Input: one row per entity with `sequence ARRAY<ARRAY<T>>` (see
     baskets.event_sequences). Output: (sequence, freq) ordered.
 
-    The input is CACHED for the duration of the mining call
+    An uncached input is CACHED for the duration of the mining call
     (optimization r11, guide §5 caching + the fit_fpgrowth
-    rationale): MLlib's PrefixSpan is eager and makes multiple full
-    passes over `sequences` (sequence count, frequent-item scan,
+    rationale; an input the caller cached is left as it came):
+    MLlib's PrefixSpan is eager and makes multiple full passes over
+    `sequences` (sequence count, frequent-item scan,
     internal-representation build), and the typical input lineage is
     a groupBy/collect_list SHUFFLE (baskets.event_sequences) that
     would otherwise re-run per pass — measured interleaved at sf0.1:
@@ -395,13 +449,16 @@ def prefix_span(
         maxPatternLength=max_pattern_length,
         sequenceCol=sequence_col,
     )
-    seqs = sequences.cache()
+    own_cache = sequences.storageLevel == StorageLevel.NONE
+    if own_cache:
+        sequences = sequences.cache()
     try:
-        pats = ps.findFrequentSequentialPatterns(seqs).localCheckpoint(
+        pats = ps.findFrequentSequentialPatterns(sequences).localCheckpoint(
             eager=True
         )
     finally:
-        seqs.unpersist()
+        if own_cache:
+            sequences.unpersist()
     return pats.orderBy(F.desc("freq"), F.col("sequence").cast("string"))
 
 
