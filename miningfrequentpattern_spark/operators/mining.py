@@ -29,6 +29,8 @@ from pyspark.ml.fpm import FPGrowth, FPGrowthModel, PrefixSpan
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ckpt import Pins
+
 
 # ---------------------------------------------------------------------------
 # M2/M3: pass-1 counting + min-support filter (PFP job 1 == word count)
@@ -273,7 +275,9 @@ def apriori_frequent_itemsets(
     re-inlines every lower level once per reader, turning a 13 s
     lattice into a 99 s re-execution cascade (measured at sf0.1).
     The basket-sized inputs are plain caches and are unpersisted
-    before returning.
+    before returning. One ckpt.Pins scope owns all of it: the level
+    pins are handed to the caller, each candidate pin is released
+    once its level is counted, and a failure releases everything.
 
     Fault-tolerance tradeoff: `localCheckpoint` truncates lineage by
     storing blocks on executors WITHOUT a recomputation path — an
@@ -286,12 +290,8 @@ def apriori_frequent_itemsets(
     reliable `checkpoint()` against the context's checkpoint dir
     (operators/ckpt.py), at the cost of one durable write per level.
     """
-    from .ckpt import pin, release
-
-    cached: list[DataFrame] = []
-    try:
-        baskets = baskets.select(F.col(items_col).alias("items")).cache()
-        cached.append(baskets)
+    with Pins(durable) as pins:
+        baskets = pins.cache(baskets.select(F.col(items_col).alias("items")))
         n = baskets.count()
         threshold = int(-(-min_support * n // 1))  # ceil
 
@@ -307,25 +307,21 @@ def apriori_frequent_itemsets(
             .agg(F.count(F.lit(1)).alias("freq"))
             .filter(F.col("freq") >= threshold)
         )
-        lk = pin(lk, durable)
-        results = [lk.select(F.array("i0").alias("items"), "freq")]
+        lk = pins.keep(pins.pin(lk))
+        out = lk.select(F.array("i0").alias("items"), "freq")
         frequent_singletons = lk.select("i0")
 
         # Prune each basket to frequent items once (the F-list
         # projection — same trick FP-Growth uses) so later subset
         # tests shrink.
         with_id = baskets.withColumn("_bid", F.monotonically_increasing_id())
-        pruned = (
+        pruned = pins.cache(
             with_id.select("_bid", F.explode("items").alias("i0"))
             .join(F.broadcast(frequent_singletons), "i0")
             .groupBy("_bid")
             .agg(F.sort_array(F.collect_set("i0")).alias("items"))
-            .cache()
         )
-        cached.append(pruned)
-
-        bi = pruned.select("_bid", F.explode("items").alias("i0")).cache()
-        cached.append(bi)
+        bi = pins.cache(pruned.select("_bid", F.explode("items").alias("i0")))
 
         prev = lk.select(F.array("i0").alias("itemset"))
         for k in range(2, max_k + 1):
@@ -372,11 +368,8 @@ def apriori_frequent_itemsets(
             # BIGINT) and mapping ids back to arrays afterwards via a
             # candidate-sized broadcast. The id assignment is pinned by
             # the eager checkpoint, so both readers see one assignment.
-            cands_id = pin(
-                cands.withColumn(
-                    "_cid", F.monotonically_increasing_id()
-                ),
-                durable,
+            cands_id = pins.pin(
+                cands.withColumn("_cid", F.monotonically_increasing_id())
             )
             cand_members = cands_id.select(
                 "_cid", F.explode("itemset").alias("i0")
@@ -392,28 +385,22 @@ def apriori_frequent_itemsets(
                 .join(F.broadcast(cands_id), "_cid")
                 .select("itemset", "freq")
             )
-            counted = pin(counted, durable)
+            counted = pins.pin(counted)
             # cands_id (the pre-prune candidate relation, the largest
             # per-k pin) has no consumer once `counted` is pinned —
-            # release its blocks NOW instead of leaking O(levels)
-            # executor storage for the session (code-review r9; the
-            # exact hazard ckpt.release documents). The counted pins
-            # stay: the returned plan reads them.
-            release(cands_id, durable)
+            # release its blocks NOW instead of holding O(levels)
+            # executor storage for the session. A non-empty level is
+            # kept: the returned plan reads it.
+            pins.release(cands_id)
             if counted.isEmpty():
                 break
-            results.append(
-                counted.select(F.col("itemset").alias("items"), "freq")
+            out = out.unionByName(
+                pins.keep(counted).select(
+                    F.col("itemset").alias("items"), "freq"
+                )
             )
             prev = counted.select("itemset")
-
-        out = results[0]
-        for r in results[1:]:
-            out = out.unionByName(r)
         return out.orderBy(F.desc("freq"), F.col("items"))
-    finally:
-        for c in cached:
-            c.unpersist()
 
 
 # ---------------------------------------------------------------------------

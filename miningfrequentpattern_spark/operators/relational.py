@@ -234,10 +234,19 @@ def global_row_number(
     in-partition sort — the same work a global sort would do — and
     the relation is never funneled through one task nor shuffled
     twice. Determinism across the plan's two uses of the shuffled
-    leg: the range exchange is planned once and reused
-    (ReusedExchange, asserted in tests/test_plans.py), the
-    within-partition sort is total because `order_exprs` must include
-    a unique tiebreak column, and the id assignment reads that sorted
+    leg: both must read ONE partitioning. Two range exchanges each
+    sample their own bounds, and exchange reuse cannot be relied on
+    — column pruning gives the counts leg a narrower output than a
+    consumer's rank leg, so their exchanges differ (r78 measured
+    wrong U from exactly that). So the sorted, id-tagged relation is
+    behind a lazy `localCheckpoint`: defining it runs the one range
+    shuffle, the first action materializes it, and both legs scan
+    that materialization (tests/test_plans.py asserts the shared
+    scan; tests/test_global_row_number.py the ranks). Its blocks are
+    the result's data, so it is not released here; the
+    ContextCleaner reclaims them once the result is collected. The
+    within-partition sort is total when `order_exprs` includes a
+    unique tiebreak column, and the id assignment reads that sorted
     order — so both consumers see identical (_pid, local index)
     values. Per-partition row counts are capped at 2^33 by the id
     layout (~8.6 B rows per partition — size num_partitions so
@@ -256,6 +265,7 @@ def global_row_number(
         .sortWithinPartitions(*order_exprs)
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright(F.col("_mid"), 33).cast("int"))
+        .localCheckpoint(eager=False)
     )
     counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     w_off = (

@@ -10,8 +10,9 @@ Registration is via the @query decorator:
     @query("r9_agg", oracle="SELECT ... AS sum_qty FROM lineitem ...")
     def r9_agg(spark, sf_dir): ...
 
-Contract rules enforced by convention here and asserted in
-tests/test_registry.py:
+Contract rules enforced by convention here; tests/test_oracle_parity.py
+checks them for every oracle-bearing query by comparing row count,
+column names and a value multiset against DuckDB (tests/oracle.py):
 - every computed column is aliased IDENTICALLY in the Spark plan and
   the oracle SQL (driver hashes columns sorted by name);
 - float aggregates rounded to 4dp on BOTH sides;

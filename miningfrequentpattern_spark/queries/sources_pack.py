@@ -438,11 +438,10 @@ def s08_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..functions.zorder import bucket16_sql as _b16sql
 from ..functions.zorder import morton2_sql as _m2sql
 
-# Range-bucketed z-order oracle (registry booking (n), promoted r12):
-# both engines derive each dimension's [lo, hi] bounds from the same
-# data CTE and bucket onto the full 16-bit domain before the
-# interleave — staged + certified round 11 in
-# tests/test_zorder_bucketed_staged.py, swapped in verbatim here.
+# Range-bucketed z-order oracle: both engines derive each dimension's
+# [lo, hi] bounds from the same data CTE and bucket onto the full
+# 16-bit domain before the interleave (bucket16's properties are
+# pinned in tests/test_zorder_bucketed_staged.py).
 _S09_BX = _b16sql("u", "(SELECT ulo FROM b)", "(SELECT uhi FROM b)")
 _S09_BY = _b16sql("h", "(SELECT hlo FROM b)", "(SELECT hhi FROM b)")
 _S09_ORACLE = f"""

@@ -250,31 +250,38 @@ def test_sequence_pack_windows_are_sharded(spark):
     assert all("source" in a and "shard" in a for a in args), args
 
 
+def _shared_rank_lineage(spark, p: str) -> str:
+    """global_row_number's counts and rank legs must both scan ONE
+    materialization of the range-shuffled, partition-sorted relation
+    (its lazy local checkpoint): find the checkpoint RDD that at least
+    two scans of the formatted plan `p` read and return its lineage,
+    so callers can count the exchanges beneath it."""
+    ids = re.findall(r"RDD\[(\d+)\] at localCheckpoint", p)
+    shared = [i for i in set(ids) if ids.count(i) >= 2]
+    assert len(shared) == 1, p
+    rdd = spark.sparkContext._jsc.getPersistentRDDs().get(int(shared[0]))
+    assert rdd is not None, p
+    return rdd.toDebugString()
+
+
 def test_global_rank_avoids_single_partition_window(spark):
     """r26: the two-phase rank must (a) range-shuffle the data once,
-    (b) reuse that exchange across the counts and rank legs, (c) join
-    the offsets back by BROADCAST (a shuffle join would re-exchange
-    the relation on _pid), and (d) plan NO window over the data at
-    all — local ranks come from monotonically_increasing_id shift
-    arithmetic over the partition-sorted rows; the only window is the
-    offsets prefix-sum over P≈32 count rows."""
+    (b) share that one shuffle between the counts and rank legs — both
+    scan one materialization of it, so the offsets and the local
+    indexes come from the same partitioning, (c) join the offsets
+    back by BROADCAST (a shuffle join would re-exchange the relation
+    on _pid), and (d) plan NO window over the data at all — local
+    ranks come from monotonically_increasing_id shift arithmetic over
+    the partition-sorted rows; the only window is the offsets
+    prefix-sum over P count rows."""
     p = plan_of(spark, "r26_global_order_rank")
-    assert "rangepartitioning" in p.lower(), p
+    lineage = _shared_rank_lineage(spark, p)
+    assert lineage.count("ShuffledRowRDD") == 1, lineage
     assert "BroadcastHashJoin" in p, p
     specs = [
         l for l in p.splitlines() if "windowspecdefinition" in l.lower()
     ]
     assert not any("o_totalprice" in s for s in specs), specs
-    # Exchange reuse is an AQE runtime decision: it appears only in the
-    # final adaptive plan, so materialize before asserting it.
-    df = QUERIES["r26_global_order_rank"](spark, SF_ORACLE)
-    df.collect()
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    final = buf.getvalue()
-    assert "ReusedExchange" in final, final
-    assert "isFinalPlan=true" in final, final
 
 
 def test_lm_score_and_tfidf_broadcast_vocab(spark):
@@ -338,9 +345,12 @@ def test_quality_buckets_avoid_global_window(spark):
     # l20: the decile rank must come from the two-phase distributed
     # form — no ORDER-BY-only (unpartitioned) WindowExec over the
     # corpus. Single-partition exchanges may appear only on tiny
-    # legs (per-partition offset counts, the 1-row doc count).
+    # legs (per-partition offset counts, the 1-row doc count). Both
+    # rank legs scan one materialization: the per-doc score
+    # aggregate's exchange, then the single range exchange.
     p = plan_of(spark, "l20_quality_buckets")
-    assert "rangepartitioning" in p.lower(), p
+    lineage = _shared_rank_lineage(spark, p)
+    assert lineage.count("ShuffledRowRDD") == 2, lineage
     # Since the round-4 redesign, the rank comes from shift arithmetic
     # on monotonically_increasing_id over partition-sorted rows: NO
     # windowspecdefinition may touch the data columns at all; the only
@@ -477,21 +487,29 @@ def test_compact_roundtrip_aggregates_partial_final(spark):
     assert p.count("HashAggregate") >= 2, p
 
 
-def test_pagerank_iterations_reuse_cached_edges(spark):
+def test_pagerank_iterations_reuse_cached_edges(spark, monkeypatch):
     """Every PageRank iteration must read the edge relation from the
     in-memory cache — InMemoryTableScan at least once per iteration —
-    and nothing may plan a cartesian. Audited through the operator's
-    lazy-plan seam: the registered m13 materializes via an eager
-    localCheckpoint (so its public plan is just the checkpoint scan),
-    which is itself asserted here."""
+    and nothing may plan a cartesian. Audited on the plan handed to
+    the operator's result pin, captured while its caches are still
+    live: the registered m13 returns that pin (so its public plan is
+    just the checkpoint scan), which is itself asserted here."""
+    from miningfrequentpattern_spark.operators import ckpt
     from miningfrequentpattern_spark.operators.graph import pagerank
 
+    plans = []
+    real_pin = ckpt.pin
+
+    def capture(df, durable=False):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_pin(df, durable)
+
+    monkeypatch.setattr(ckpt, "pin", capture)
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )
-    lazy = pagerank(edges, iterations=3, _materialize=False)
-    p = lazy._jdf.queryExecution().executedPlan().toString()
-    spark.catalog.clearCache()
+    pagerank(edges, iterations=3).collect()
+    p = plans[-1]
     assert "CartesianProduct" not in p
     assert p.count("InMemoryTableScan") >= 3, p
     # The registered query's public plan is the materialized scan.
@@ -1800,10 +1818,12 @@ def test_staged_zipf_rank_leg_is_two_phase(spark):
     )
     logs = ranked.select(F.log10("rank").alias("t"), F.log10("n").alias("x"))
     p = _staged_plan(series_trend(logs, [], "t", "x"))
-    assert "rangepartitioning" in p, p
+    # both rank legs scan one materialization: the term-count
+    # aggregate's exchange, then the single range exchange
+    lineage = _shared_rank_lineage(spark, p)
+    assert lineage.count("ShuffledRowRDD") == 2, lineage
     # no Window over the data: the only window is the ≤P-row offset
-    # prefix sum (the shared ranked leg prints twice pre-AQE — the
-    # usual DAG expansion; the range exchange dedups at runtime)
+    # prefix sum
     assert p.count("Window (") <= 2, p
     assert "InPandas" not in p and "BatchEvalPython" not in p, p
 
@@ -1901,9 +1921,9 @@ def test_staged_chi2_margins_on_cell_grain(spark):
 
 def test_staged_mannwhitney_two_phase_rank_no_global_window(spark):
     """r78 candidate: the midrank leg rides global_row_number's
-    range exchange — NO single-partition window over the data; the
-    only Window node is the ≤P-row offset prefix sum (printed twice
-    pre-AQE by the shared-leg DAG expansion); everything after is
+    single range exchange, shared by its counts and rank legs — NO
+    single-partition window over the data; the only Window node is
+    the ≤P-row offset prefix sum; everything after is
     value-cardinality sized."""
     from miningfrequentpattern_spark.operators.relational import (
         mannwhitney_z,
@@ -1914,7 +1934,8 @@ def test_staged_mannwhitney_two_phase_rank_no_global_window(spark):
     p = _staged_plan(
         mannwhitney_z(ev, "event_type", "value", "click", "view")
     )
-    assert "rangepartitioning" in p, p
+    lineage = _shared_rank_lineage(spark, p)
+    assert lineage.count("ShuffledRowRDD") == 1, lineage
     assert p.count("Window (") <= 2, p
     assert "InPandas" not in p and "BatchEvalPython" not in p, p
 

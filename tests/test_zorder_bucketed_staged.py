@@ -1,77 +1,19 @@
-"""STAGED round-12 candidate: range-bucketed z-order keys (registry
-booking (n), round 11).
+"""Properties of functions/zorder.py::bucket16, the range bucketing
+behind the registered s09_zorder_key.
 
 spread16 truncates to 16 bits, so s09's wide-domain inputs (hour
-≈ 490k, unbounded user_id) alias 65536 apart — both engines agree, so
-no hash ever failed, but file-level min/max pruning quietly weakens.
-The staged fix (functions/zorder.py::bucket16 / morton2_bucketed)
-range-buckets each dimension onto the full 16-bit domain from
-data-derived bounds. These tests certify the staged r12 shape of the
-s09 registration: the Spark expression vs the identical SQL (oracle
-parity), monotonicity (locality preserved), full-domain coverage (no
-aliasing), and the clamp for out-of-bounds stragglers.
-
-PROMOTED round 12: s09_zorder_key's registered body + oracle now ARE
-these staged forms (sources_pack.py) — these tests stay as the
-independent certification of the shape and of bucket16's properties.
+≈ 490k, unbounded user_id) would alias 65536 apart and file-level
+min/max pruning would quietly weaken. bucket16 range-buckets each
+dimension onto the full 16-bit domain from data-derived bounds. The
+test below pins its monotonicity (locality preserved), full-domain
+coverage (no aliasing) and the clamp for out-of-bounds stragglers;
+s09's value-for-value parity with its SQL twin is
+tests/test_oracle_parity.py::test_oracle_match[s09_zorder_key].
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from .conftest import SF_ORACLE
-from .oracle import compare
-
-
-def _staged_s09_spark(spark, sf_dir):
-    """The r12 shape: z-order key over range-bucketed (user_id, hour)."""
-    from miningfrequentpattern_spark.functions.zorder import (
-        morton2_bucketed,
-    )
-    from miningfrequentpattern_spark.sources.io import load_table
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_id") < 2000
-    )
-    hour = F.floor(F.unix_timestamp("ts") / 3600).cast("long")
-    base = ev.select("event_id", F.col("user_id").alias("u"), hour.alias("h"))
-    bounds = base.agg(
-        F.min("u").alias("ulo"), F.max("u").alias("uhi"),
-        F.min("h").alias("hlo"), F.max("h").alias("hhi"),
-    )
-    return base.crossJoin(F.broadcast(bounds)).select(
-        "event_id",
-        morton2_bucketed(
-            F.col("u"), F.col("h"),
-            F.col("ulo"), F.col("uhi"), F.col("hlo"), F.col("hhi"),
-        ).alias("zval"),
-    )
-
-
-def _staged_s09_oracle() -> str:
-    from miningfrequentpattern_spark.functions.zorder import (
-        bucket16_sql,
-        morton2_sql,
-    )
-
-    bx = bucket16_sql("u", "(SELECT ulo FROM b)", "(SELECT uhi FROM b)")
-    by = bucket16_sql("h", "(SELECT hlo FROM b)", "(SELECT hhi FROM b)")
-    return f"""
-    WITH e AS (SELECT event_id, user_id AS u,
-                      CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h
-               FROM events WHERE event_id < 2000),
-    b AS (SELECT min(u) AS ulo, max(u) AS uhi,
-                 min(h) AS hlo, max(h) AS hhi FROM e)
-    SELECT event_id, {morton2_sql(bx, by)} AS zval FROM e
-    """
-
-
-def test_bucketed_zorder_oracle_parity(spark, duck):
-    """The staged r12 s09 shape hash-matches its SQL twin at sf0.01 —
-    bounds derivation, floor-of-double bucketing, clamp, and the
-    Morton interleave, value-for-value."""
-    compare(_staged_s09_spark(spark, SF_ORACLE), duck, _staged_s09_oracle())
 
 
 def test_bucket16_monotone_full_domain_and_clamp(spark):
